@@ -1,52 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import graft.Sweep.{fmt, jsonList, jsonObject}
+
+/** Analytics benchmark: every `SparkEntry.queries` entry, median-of-N, at
+  * `SPARK_GRAFT_SF_DIR` (default: the sf0.1 fixture), plus an optional
+  * sf1 (10×) section. Prints ONE JSON line to stdout; the full per-query
+  * detail goes to stderr and a sidecar file.
+  *
+  * Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_RUNS (default 3), SPARK_GRAFT_ONLY
+  * (comma-separated subset; skips the sf1 section), SPARK_GRAFT_SF1_DIR,
+  * SPARK_GRAFT_SF1=0, SPARK_GRAFT_SF1_BUDGET, SPARK_GRAFT_SF1_RUNS.
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // explicit, not inherited from javaOptions: Tables.load's NTZ→instant
-      // ts normalization is timezone-dependent and must always run in UTC
-      .config("spark.sql.session.timeZone", "UTC")
-      // direct task commits: halves the per-directory rename cost of
-      // partitionBy index materialization (local FS, no job-abort risk)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // NOTE: don't shrink spark.sql.files.maxPartitionBytes here — the
-      // fixture tables are single-row-group files, so smaller splits only
-      // add empty partitions and overhead (measured +25% total)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm the session (codegen, parquet footers, file listing) so per-query
-    // numbers measure steady-state compute, not first-job JVM overheads
-    Tables.names.foreach { n =>
-      try Tables.load(spark, sfDir, n).count() catch { case _: Throwable => () }
-    }
-    // One-time JVM init of collation-aware string ops: the first upper()/
-    // lower() anywhere triggers CollationAwareUTF8String.<clinit>, which
-    // loads ICU case-mapping + CJK break dictionaries from the jars —
-    // measured 13-38s of wall (mostly jar I/O) when it lands inside a timed
-    // query mid-bench. Pay it here, once, like codegen warmup.
-    locally {
-      import org.apache.spark.sql.functions.{upper, lower, lit, concat, col}
-      // concat with a non-foldable column defeats constant folding, collect()
-      // defeats column pruning — the upper/lower MUST execute in a task
-      spark.range(1)
-        .select(upper(concat(lit("首尔 ölçü İI"), col("id").cast("string"))).as("u"),
-          lower(concat(lit("İI"), col("id").cast("string"))).as("l"))
-        .collect()
-    }
-    // warm the build-once index stores (LSH buckets, quantized projection) so
-    // the timed loop measures probe cost only — the reference builds indexes
-    // at ingest, not per query; IndexStorage logs rebuilt vs reused to stderr
-    SparkEntry.indexBackedQueries.foreach { n =>
-      SparkEntry.queries.get(n).foreach { fn =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      }
-    }
+    val onlyEnv = sys.env.get("SPARK_GRAFT_ONLY")
+    val names = Sweep.only(SparkEntry.queries.keySet.toSeq).sorted
+    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
+    val spark = GraftSession.local()
+    val ms = fmt(3) _
+    val buildSec = Sweep.warm(spark, sfDir, names)
     // ---- host canary (VERDICT r12 #2) --------------------------------
     // A fixed pure-CPU loop and a fixed one-table scan, timed after warmup
     // and before the query loop, emitted in the headline JSON. 23 of the
@@ -55,8 +28,7 @@ object Bench {
     // numbers let a reader normalize round-over-round medians for host
     // drift (cpu ≈ single-core speed; scan ≈ storage+parquet-decode
     // speed). Single-threaded by construction so executor count cannot
-    // change what they measure. Additive key — the contract line still
-    // starts {"metric":"total",...}.
+    // change what they measure.
     val canary = {
       System.gc()
       val t0 = System.nanoTime()
@@ -73,119 +45,59 @@ object Bench {
       System.err.println(f"[graft] canary: cpu=$cpuSec%.3f scan=$scanSec%.3f")
       (cpuSec, scanSec)
     }
-    // local dev aid: SPARK_GRAFT_ONLY=comma,separated,names times a subset;
-    // SPARK_GRAFT_RUNS overrides the per-query repeat count
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
     // median-of-N (plus min) per query: a single recorded run cannot be
     // trusted on a shared host — the r3 bench burned ~30s of host contention
     // in one alphabetical window and briefly looked like four regressions.
     // median≈min on a quiet machine; median>>min flags contention, not code.
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) =>
-        val rebuildsBefore = graft.sources.IndexStorage.rebuilds.get()
-        // one GC per query, before its first timed run: localCheckpoint
-        // blocks (capped dedup/fuzzy paths) are only reclaimed by the
-        // ContextCleaner after a GC notices the orphaned references, and
-        // without this the storage pressure they accumulate over a
-        // 120+-query run lands on whatever queries sort LAST — the r7 full
-        // run showed an alphabetical tail block (winsorize/writetime/
-        // zorder) at 10-15× its standalone cost, median ≈ min, with zero
-        // code difference.
-        System.gc()
-        val times = (1 to runs).map { i =>
-          // operators may materialize eager intermediates scoped to their own
-          // query; release before timing so queries don't inherit GC pressure
-          spark.catalog.clearCache()
-          System.err.println(s"[graft] bench start: $name run $i/$runs")
-          // label every job with its query (guide §1.5) so event-log/UI
-          // profiling attributes the run's jobs — timing is unchanged
-          spark.sparkContext.setJobDescription(s"bench:$name:$i")
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-          val dt = (System.nanoTime() - t0) / 1e9
-          spark.sparkContext.setJobDescription(null)
-          dt
-        }.sorted
-        val rebuilt = graft.sources.IndexStorage.rebuilds.get() > rebuildsBefore
-        (name, times(times.length / 2), times.head, rebuilt)
-      }
-    def jmap(f: ((String, Double, Double, Boolean)) => String): String =
-      results.map(r => "\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")
-    // Locale.ROOT so a comma-decimal default locale cannot corrupt the
-    // JSON ("24,400")
-    def fmt(dec: Int)(d: Double): String =
-      String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(d))
-    val ms = fmt(3) _
+    val results = Sweep.run(spark, sfDir, names, runs, "bench")
+    val timed = results.filterNot(_.failed)
+    val failed = results.filter(_.failed).map(_.name)
+    def jmap(f: Sweep.Timed => String): String = jsonObject(results.map(r => r.name -> f(r)))
+    val orNull = (o: Option[Double]) => o.map(ms).getOrElse("null")
     // The driver's recorder keeps only the LAST ~2000 chars of stdout and
-    // its parser wants ONE JSON line in the contract shape (every round
-    // through r6 recorded "parsed": null — two JSON lines behind sbt's
-    // "[info] " logger prefix defeated it; build.sbt now sets
+    // its parser wants ONE JSON line in the contract shape (build.sbt sets
     // run / outputStrategy := StdoutOutput so the forked JVM's stdout
     // passes through raw). So: stdout carries EXACTLY ONE bare JSON line —
     // the headline — sized to fit the recorded tail completely even with
     // sbt's trailing "[success] …" line (~80 chars) after it. The full
-    // 3-decimal median/min/store-rebuilt detail goes to stderr and the
-    // sidecar file, never stdout.
-    val qs = jmap(r => ms(r._2))
-    val qsMin = jmap(r => ms(r._3))
-    val qsRebuilt = jmap(_._4.toString)
-    val total = results.map(_._2).sum
+    // 3-decimal median/min/store-rebuilt/store-build detail goes to stderr
+    // and the sidecar file, never stdout. A failed query is null here.
+    val median = (t: Sweep.Timed) => t.median.get
+    val total = timed.map(median).sum
     // min-based total alongside the median-based one: on a contended host
     // median >> min flags drift (r9's +24.5% artifact was exactly this);
     // a reader comparing rounds should trust whichever pair agrees
-    val totalMin = results.map(_._3).sum
+    val totalMin = timed.map(_.min.get).sum
     val sfName = new java.io.File(sfDir).getName // "sf0.1", not the full path
     val detail = s"""{"detail":"3-decimal median + min + store-rebuilt",""" +
-      s""""runs_per_query":$runs,"queries_min":$qsMin,""" +
-      s""""queries_store_rebuilt":$qsRebuilt,"queries_median":$qs}"""
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("/tmp/graft-bench-detail.json"),
-      detail.getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+      s""""runs_per_query":$runs,"queries_min":${jmap(r => orNull(r.min))},""" +
+      s""""queries_store_rebuilt":${jmap(_.rebuilt.toString)},""" +
+      s""""queries_build_sec":${jsonObject(buildSec.map { case (n, s) => n -> ms(s) })},""" +
+      s""""queries_median":${jmap(r => orNull(r.median))}}"""
+    try Sweep.write("/tmp/graft-bench-detail.json", detail) catch { case _: Throwable => () }
     System.err.println(detail)
     // ---- optional sf1 (10×) scale-validation section ------------------
     // When a GenScale-derived 10× corpus is present (default path, or
     // SPARK_GRAFT_SF1_DIR), run a family-covering headline subset against
-    // it ONCE each and report per-query time + the ratio vs this run's
-    // sf0.1 median — the empirical check behind every "scales linearly"
-    // claim. Wall-clock-budgeted (SPARK_GRAFT_SF1_BUDGET sec, default
-    // 900): if the budget trips, the count of SKIPPED queries is reported
-    // — a truncated sweep must say so, never look complete.
+    // it and report per-query time + the ratio vs this run's sf0.1
+    // median — the empirical check behind every "scales linearly" claim.
+    // Wall-clock-budgeted (SPARK_GRAFT_SF1_BUDGET sec, default 900): if
+    // the budget trips, the count of SKIPPED queries is reported — a
+    // truncated sweep must say so, never look complete.
     val sf1Dir = sys.env.get("SPARK_GRAFT_SF1_DIR")
       .orElse(Option("/root/repo/testdata-sf1")
         .filter(d => new java.io.File(d, "lineitem.parquet").exists()))
-      .filter(_ => sys.env.get("SPARK_GRAFT_SF1").forall(_ != "0") && only.isEmpty)
+      .filter(_ => sys.env.get("SPARK_GRAFT_SF1").forall(_ != "0") && onlyEnv.isEmpty)
     val sf1Section: Option[String] = sf1Dir.map { dir =>
-      val subset = Seq(
-        // one per operator family, biased toward the shuffle/join-heavy
-        "q1_agg", "q5_region_revenue", "ann_cosine", "ann_lsh", "ann_ivfpq",
-        "ann_rescored", "bm25_multi", "dedup_exact", "dedup_minhash",
-        "dedup_embedding_lsh", "semantic_dedup", "semantic_dedup_capped",
-        "dedup_clusters",
-        "fuzzy_join", "fuzzy_join_exact", "decontamination_bloom",
-        "span_dedup", "gopher_report", "lm_score", "bpe_merges", "token_ids",
-        "stratified_sample", "pack_sequences", "pagerank", "hits_scores",
-        "heavy_hitters", "quantile_histogram", "asof_join", "rolling_stats",
-        "event_sessions_window", "hybrid_rrf", "knn_join_lsh", "image_features")
-        .filter(SparkEntry.queries.contains)
+      val subset = SparkEntry.benchSf1Queries
       val budgetSec = sys.env.getOrElse("SPARK_GRAFT_SF1_BUDGET", "900").toDouble
-      val t0All = System.nanoTime()
-      def spent: Double = (System.nanoTime() - t0All) / 1e9
-      Tables.names.foreach { n =>
-        try Tables.load(spark, dir, n).count() catch { case _: Throwable => () }
-      }
+      val deadline = System.nanoTime() + (budgetSec * 1e9).toLong
       // store warm: probe-vs-probe comparability with the sf0.1 medians
       // (which run against pre-built stores); build cost counts against
       // the budget and is reported separately
-      val buildT0 = System.nanoTime()
-      subset.filter(SparkEntry.indexBackedQueries.contains).foreach { n =>
-        if (spent < budgetSec * 0.6)
-          try SparkEntry.queries(n)(spark, dir).count() catch { case _: Throwable => () }
-      }
-      val buildSec = (System.nanoTime() - buildT0) / 1e9
-      val mainMed = results.map(r => r._1 -> r._2).toMap
+      val builds = Sweep.warm(spark, dir, subset, budgetSec * 0.6)
+      val build = builds.map(_._2).sum
+      val mainMed = timed.map(t => t.name -> median(t)).toMap
       // min-of-N (default 2): the sf1 section runs AFTER the 170-query
       // marathon in the same JVM, and a single run absorbs its
       // accumulated GC/cache pressure — measured 2× inflation on the
@@ -193,62 +105,36 @@ object Bench {
       // contention-free estimate, same rationale as the main loop's
       // median-vs-min pair.
       val sf1Runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_SF1_RUNS", "2").toInt)
-      var skipped = 0
-      // per-run SUCCESS is tracked: a crashing query must surface as a
-      // failure marker, never as a plausible elapsed-time-to-throw sample
-      // — "a truncated sweep must never look complete" applies to crashes
-      // exactly as it does to budget skips
-      val sf1Res: Seq[(String, Option[Double], Boolean)] = subset.flatMap { name =>
-        if (spent >= budgetSec) { skipped += 1; None }
-        else {
-          val rb = graft.sources.IndexStorage.rebuilds.get()
-          val runsRes = (1 to sf1Runs).map { i =>
-            System.gc()
-            spark.catalog.clearCache()
-            System.err.println(s"[graft] sf1 bench: $name run $i/$sf1Runs")
-            val t0 = System.nanoTime()
-            val ok =
-              try { SparkEntry.queries(name)(spark, dir).count(); true }
-              catch { case e: Throwable =>
-                System.err.println(s"[graft] sf1 bench FAILED: $name: ${e.getMessage}")
-                false
-              }
-            ((System.nanoTime() - t0) / 1e9, ok)
-          }
-          val okTimes = runsRes.collect { case (t, true) => t }
-          Some((name, okTimes.minOption,
-            graft.sources.IndexStorage.rebuilds.get() > rb))
-        }
-      }
-      // full detail (time, ratio, store-rebuilt, failed) to stderr + sidecar
-      val detail1 = sf1Res.sortBy(_._1).map { case (n, t, rb) =>
-        val ratio = t.flatMap(tt => mainMed.get(n).filter(_ > 0.0)
+      val sf1Res = Sweep.run(spark, dir, subset, sf1Runs, "sf1 bench", deadline)
+        .sortBy(_.name)
+      val skipped = subset.length - sf1Res.length
+      val buildOf = builds.toMap
+      // full detail (time, ratio, store-rebuilt, failed, store build) to
+      // stderr + sidecar
+      val detail1 = jsonObject(sf1Res.map { r =>
+        val ratio = r.min.flatMap(tt => mainMed.get(r.name).filter(_ > 0.0)
           .map(m => fmt(1)(tt / m))).getOrElse("null")
-        s""""$n":{"sec":${t.map(ms).getOrElse("null")},"failed":${t.isEmpty},""" +
-          s""""x_vs_sf01":$ratio,"store_rebuilt":$rb}"""
-      }.mkString("{", ",", "}")
-      System.err.println(s"""{"sf1_detail":$detail1,"sf1_build_sec":${ms(buildSec)}}""")
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get("/tmp/graft-bench-sf1-detail.json"),
-        s"""{"sf1_detail":$detail1,"sf1_build_sec":${ms(buildSec)}}""".getBytes("UTF-8"))
+        r.name -> (s"""{"sec":${orNull(r.min)},"failed":${r.failed},""" +
+          s""""x_vs_sf01":$ratio,"store_rebuilt":${r.rebuilt},""" +
+          s""""build_sec":${buildOf.get(r.name).map(ms).getOrElse("null")}}""")
+      })
+      val sidecar = s"""{"sf1_detail":$detail1,"sf1_build_sec":${ms(build)}}"""
+      System.err.println(sidecar)
+      try Sweep.write("/tmp/graft-bench-sf1-detail.json", sidecar)
       catch { case _: Throwable => () }
       // headline payload: per-query seconds (null = FAILED, every run
       // threw); ratios only where >10× (the superlinear exceptions the
       // sweep exists to expose — ratios on sub-50ms sf0.1 medians are
       // noise and stay in the sidecar)
-      val qs1 = sf1Res.sortBy(_._1)
-        .map { case (n, t, _) => "\"" + n + "\":" + t.map(fmt(2)).getOrElse("null") }
-        .mkString("{", ",", "}")
-      val failed = sf1Res.collect { case (n, None, _) => "\"" + n + "\"" }
-        .sorted.mkString("[", ",", "]")
-      val sup = sf1Res.flatMap { case (n, t, _) =>
-        t.flatMap(tt => mainMed.get(n).filter(_ >= 0.05).map(m => n -> tt / m))
-      }.filter(_._2 > 10.0).sortBy(_._1)
-        .map { case (n, r) => "\"" + n + "\":" + fmt(1)(r) }
-        .mkString("{", ",", "}")
-      s""""sf1":{"n":${sf1Res.length},"skipped":$skipped,"failed":$failed,""" +
-        s""""stat":"min_of_$sf1Runs","total":${fmt(1)(sf1Res.flatMap(_._2).sum)},""" +
-        s""""build_sec":${fmt(1)(buildSec)},"over_10x":$sup,"queries":$qs1}"""
+      val qs1 = jsonObject(sf1Res.map(r => r.name -> r.min.map(fmt(2)).getOrElse("null")))
+      val sup = jsonObject(sf1Res.flatMap { r =>
+        r.min.flatMap(tt => mainMed.get(r.name).filter(_ >= 0.05).map(m => tt / m))
+          .filter(_ > 10.0).map(x => r.name -> fmt(1)(x))
+      })
+      s""""sf1":{"n":${sf1Res.length},"skipped":$skipped,""" +
+        s""""failed":${jsonList(sf1Res.filter(_.failed).map(_.name))},""" +
+        s""""stat":"min_of_$sf1Runs","total":${fmt(1)(sf1Res.flatMap(_.min).sum)},""" +
+        s""""build_sec":${fmt(1)(build)},"over_10x":$sup,"queries":$qs1}"""
     }
 
     // headline queries map: the slowest-first PREFIX that fits a budget
@@ -259,35 +145,27 @@ object Bench {
     // named query could silently drop while a faster short-named one stays.
     // The ONE stdout line must fit the driver's ~2000-char recorded tail,
     // so when the sf1 section is present it gets the chars the sf0.1 map
-    // gives up.
-    // budget shaved 700→610 / 1600→1510 for the r13 additive keys (canary
-    // + map-honesty counts, ~90 chars) so the ONE line still fits the
-    // driver's recorded tail
-    val budget = if (sf1Section.isDefined) 610 else 1510
-    val bySlow = results.sortBy(-_._2)
-    val kept = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    var used = 0
-    var full = false
-    bySlow.foreach { r =>
-      val entry = "\"" + r._1 + "\":" + fmt(2)(r._2)
-      if (!full && used + entry.length + 1 <= budget) {
-        kept += ((r._1, r._2)); used += entry.length + 1
-      } else full = true
-    }
-    val qsSlow = kept.sortBy(_._1)
-      .map { case (n, v) => "\"" + n + "\":" + fmt(2)(v) }
-      .mkString("{", ",", "}")
+    // gives up, and the failed list takes its length out of the budget.
+    val failedJson = jsonList(failed)
+    val budget = (if (sf1Section.isDefined) 610 else 1510) - failedJson.length
+    val entry = (t: Sweep.Timed) => t.name -> fmt(2)(median(t))
+    val cost = (t: Sweep.Timed) => t.name.length + fmt(2)(median(t)).length + 4 // "n":v,
+    val bySlow = timed.sortBy(t => -median(t))
+    val kept = bySlow.zip(bySlow.scanLeft(0)(_ + cost(_)).tail)
+      .takeWhile(_._2 <= budget).map(_._1)
+    val qsSlow = jsonObject(kept.sortBy(_.name).map(entry))
     val sf1Part = sf1Section.map("," + _).getOrElse("")
     // n_queries_in_map / dropped_from_map (VERDICT r12 #9): the slowest-N
     // stdout prefix reshuffles membership as queries speed up or slow
-    // down; these counts let the driver's comparator distinguish "left
-    // the headline because it got faster" from an actual removal (r12's
-    // two phantom 'dropped' rows), and point it at the committed full map.
+    // down; these counts let a comparator distinguish "left the headline
+    // because it got faster" from an actual removal. Failed queries are
+    // counted in n_queries and listed under "failed", not as dropped.
     println(s"""{"metric":"total","value":${ms(total)},"unit":"sec",""" +
       s""""value_min":${ms(totalMin)},""" +
       s""""n_queries":${results.length},""" +
       s""""n_queries_in_map":${kept.length},""" +
-      s""""dropped_from_map":${results.length - kept.length},""" +
+      s""""dropped_from_map":${timed.length - kept.length},""" +
+      s""""failed":$failedJson,""" +
       s""""canary":{"cpu":${fmt(2)(canary._1)},"scan":${fmt(2)(canary._2)}},""" +
       s""""queries_note":"the ${kept.length} slowest by median; full map in /tmp/graft-bench-detail.json + stderr",""" +
       s""""queries":$qsSlow$sf1Part,"sf":"$sfName"}""")

@@ -1,16 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.Sweep.fmt
 
-/** One-step-beyond-local[32] evidence (VERDICT r9 #8): time the sf1
+/** One-step-beyond-local[N] evidence (VERDICT r9 #8): time the sf1
   * headline subset under BOTH `local[N]` (threads in one JVM — no
   * serialization across tasks, shuffle via memory/disk shortcuts) and
   * `local-cluster[workers,cores,memMB]` (real executor PROCESSES from the
   * standalone mini-cluster: closures and shuffle blocks actually
   * serialize, transfers cross process boundaries, and a task that
   * accidentally captures driver-only state fails instead of silently
-  * working). Equal total cores/memory keeps the comparison about the
-  * EXECUTION BOUNDARY, not resources.
+  * working). Equal total cores keeps the comparison about the EXECUTION
+  * BOUNDARY, not resources.
   *
   * This is the closest approximation to multi-executor semantics that
   * exists without real infra; divergences beyond serialization overhead
@@ -18,116 +18,57 @@ import org.apache.spark.sql.SparkSession
   * are exactly the class of bug local[N] cannot see.
   *
   * Usage: BenchCluster <sfDir> [outFile]
-  * Env: SPARK_GRAFT_CLUSTER (default "local-cluster[2,16,8192]"),
-  *      SPARK_GRAFT_LOCAL (default "local[32]"),
-  *      SPARK_GRAFT_RUNS (default 2), SPARK_GRAFT_ONLY (subset override).
+  * Env: SPARK_GRAFT_CLUSTER (default "local-cluster[2,cpus/2,8192]"),
+  *      SPARK_GRAFT_LOCAL (default "local[cpus]"), SPARK_GRAFT_CPUS,
+  *      SPARK_GRAFT_RUNS (default 2), SPARK_GRAFT_ONLY (subset override;
+  *      default `SparkEntry.benchSf1Queries`).
   * Requires SPARK_HOME (executor launch) — the run script exports it.
   */
 object BenchCluster {
-
-  /** The Bench sf1-section subset — one query per operator family,
-    * biased toward the shuffle/join-heavy (kept in sync with Bench). */
-  val Subset: Seq[String] = Seq(
-    "q1_agg", "q5_region_revenue", "ann_cosine", "ann_lsh", "ann_ivfpq",
-    "ann_rescored", "bm25_multi", "dedup_exact", "dedup_minhash",
-    "dedup_embedding_lsh", "semantic_dedup", "dedup_clusters",
-    "fuzzy_join", "fuzzy_join_exact", "decontamination_bloom",
-    "span_dedup", "gopher_report", "lm_score", "bpe_merges", "token_ids",
-    "stratified_sample", "pack_sequences", "pagerank", "hits_scores",
-    "heavy_hitters", "quantile_histogram", "asof_join", "rolling_stats",
-    "event_sessions_window", "hybrid_rrf", "knn_join_lsh", "image_features")
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outFile = args.lift(1)
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt)
-    val subset = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").toSeq).getOrElse(Subset)
-      .filter(SparkEntry.queries.contains)
-    val masters = Seq(
-      "local" -> sys.env.getOrElse("SPARK_GRAFT_LOCAL", "local[32]"),
-      "cluster" -> sys.env.getOrElse("SPARK_GRAFT_CLUSTER", "local-cluster[2,16,8192]"))
-
-    def fmt(d: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(d))
+    val subset = Sweep.only(SparkEntry.benchSf1Queries)
+    val cpus = GraftSession.cpus
+    val mLocal = sys.env.getOrElse("SPARK_GRAFT_LOCAL", s"local[$cpus]")
+    val mCluster = sys.env.getOrElse("SPARK_GRAFT_CLUSTER",
+      s"local-cluster[2,${math.max(1, cpus / 2)},8192]")
 
     // The two masters need SEPARATE SparkContexts — run them sequentially,
     // stopping each before the next (one JVM, one live context at a time).
-    val sections = masters.map { case (label, master) =>
-      val b = SparkSession.builder()
-        .master(master)
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+    def sweep(label: String, master: String): Seq[Sweep.Timed] = {
       // executor processes need the application classes (operators,
-      // custom expressions, lambdas run in tasks) — sbt's class dirs
-      if (master.startsWith("local-cluster")) {
-        val appCp = Seq(
-          "target/scala-2.13/classes",
-          sys.props.getOrElse("user.dir", ".") + "/target/scala-2.13/classes")
-          .map(new java.io.File(_)).filter(_.isDirectory)
-          .map(_.getAbsolutePath).distinct.mkString(":")
-        b.config("spark.executor.extraClassPath", appCp)
-          .config("spark.executor.memory", "6g")
-      }
-      val spark = b.getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      // custom expressions, lambdas run in tasks) — sbt's class dirs —
+      // and 3/4 of their worker's memory
+      val executor =
+        if (!master.startsWith("local-cluster")) Nil
+        else {
+          val appCp = Seq(
+            "target/scala-2.13/classes",
+            sys.props.getOrElse("user.dir", ".") + "/target/scala-2.13/classes")
+            .map(new java.io.File(_)).filter(_.isDirectory)
+            .map(_.getAbsolutePath).distinct.mkString(":")
+          val workerMb = master.split("[\\[\\],]").last.trim.toInt
+          Seq("spark.executor.extraClassPath" -> appCp,
+            "spark.executor.memory" -> s"${workerMb * 3 / 4}m")
+        }
+      val spark = GraftSession.at(master, executor: _*)
       try {
-        Tables.names.foreach { n =>
-          try Tables.load(spark, sfDir, n).count() catch { case _: Throwable => () }
-        }
-        locally { // ICU init (see Bench)
-          import org.apache.spark.sql.functions.{upper, col, concat, lit}
-          spark.range(1)
-            .select(upper(concat(lit("首尔 İI"), col("id").cast("string"))))
-            .collect()
-        }
-        subset.filter(SparkEntry.indexBackedQueries.contains).foreach { n =>
-          try SparkEntry.queries(n)(spark, sfDir).count()
-          catch { case _: Throwable => () }
-        }
-        val rows = subset.map { name =>
-          val times = (1 to runs).map { i =>
-            System.gc()
-            spark.catalog.clearCache()
-            System.err.println(s"[graft] cluster bench [$label] $name run $i/$runs")
-            val t0 = System.nanoTime()
-            val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-            catch { case e: Throwable =>
-              System.err.println(s"[graft] cluster bench FAILED [$label] $name: ${e.getMessage}")
-              false
-            }
-            ((System.nanoTime() - t0) / 1e9, ok)
-          }
-          (name, times.collect { case (t, true) => t }.minOption)
-        }
-        (label, master, rows)
+        Sweep.warm(spark, sfDir, subset)
+        Sweep.run(spark, sfDir, subset, runs, s"cluster bench [$label]")
       } finally spark.stop()
     }
-
-    val Seq((_, mLocal, local), (_, mCluster, cluster)) = sections
-    val localMap = local.toMap
-    val perQuery = cluster.map { case (n, ct) =>
-      val lt = localMap.getOrElse(n, None)
-      val ratio = for { c <- ct; l <- lt if l > 0 } yield c / l
-      s""""$n":{"local_sec":${lt.map(fmt).getOrElse("null")},""" +
-        s""""cluster_sec":${ct.map(fmt).getOrElse("null")},""" +
-        s""""ratio":${ratio.map(fmt).getOrElse("null")}}"""
-    }.mkString("{", ",", "}")
-    val failed = (cluster.collect { case (n, None) => n } ++
-      local.collect { case (n, None) => n }).distinct.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val local = sweep("local", mLocal)
+    val cluster = sweep("cluster", mCluster)
+    val report = Sweep.pairwise("local_sec", local, "cluster_sec", cluster, ratioDecimals = 2)
     val json =
       s"""{"metric":"local_vs_local_cluster","sf":"${new java.io.File(sfDir).getName}",""" +
         s""""stat":"min_of_$runs","local":"$mLocal","cluster":"$mCluster",""" +
-        s""""total_local":${fmt(local.flatMap(_._2).sum)},""" +
-        s""""total_cluster":${fmt(cluster.flatMap(_._2).sum)},""" +
-        s""""failed":$failed,"queries":$perQuery}"""
+        s""""total_local":${fmt(2)(local.flatMap(_.min).sum)},""" +
+        s""""total_cluster":${fmt(2)(cluster.flatMap(_.min).sum)},""" +
+        s""""failed":${report.failed},"queries":${report.queries}}"""
     println(json)
-    outFile.foreach { f =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(f), json.getBytes("UTF-8"))
-    }
+    outFile.foreach(Sweep.write(_, json))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.Sweep.fmt
 
 /** Scale-decade spot sweep: time a shuffle-heavy query subset on a BASE
   * corpus and on a SCALED corpus (GenScale outputs, e.g. sf1 → sf10) in one
@@ -10,123 +10,42 @@ import org.apache.spark.sql.SparkSession
   * lives in Bench's `sf1` section.
   *
   * Usage: BenchScale <baseDir> <scaledDir> [factor=10] [outFile]
-  * Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_SCALE_RUNS (default 2),
-  *      SPARK_GRAFT_SCALE_ONLY (comma-separated subset override).
+  * Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_RUNS (default 2),
+  *      SPARK_GRAFT_ONLY (comma-separated subset override; default
+  *      `SparkEntry.scaleQueries`).
   *
-  * Failure discipline matches Bench's sf1 section: per-run success is
-  * tracked, a query whose every run throws reports `"sec":null` plus a
-  * `failed` list entry — a crashed sweep must never look complete.
+  * The pinned `knn_join_lsh`/`dedup_embedding_lsh`/`semantic_dedup` rows
+  * time the deterministic oracle variants, kept as the recorded cost of
+  * the quadratic fixed-parameter shape; the `_auto` forms are the API
+  * defaults.
   */
 object BenchScale {
-
-  /** The shuffle-heaviest query families (VERDICT r8 item 1): iterative
-    * graph, candidate-explosion joins, signature stores, global merges. */
-  val DefaultSubset: Seq[String] = Seq(
-    "fuzzy_join", "fuzzy_join_exact", "knn_join_lsh", "knn_join_lsh_auto",
-    "knn_join_ivf", "knn_join_ivf_auto",
-    "hits_scores", "pagerank", "dedup_clusters", "dedup_minhash",
-    "semantic_dedup", "semantic_dedup_auto", "dedup_embedding_lsh",
-    "dedup_embedding_lsh_auto", "bpe_merges", "decontamination_bloom",
-    "decontamination_fixed_bench",
-    "knn_join_ivf_sqrt", "semantic_dedup_sqrt", "semantic_dedup_capped",
-    "dedup_clusters_best")
-
-  // Since round 10 the `_auto` occupancy-constant forms ARE the API
-  // defaults (the un-suffixed entry points route to them); the pinned
-  // `knn_join_lsh`/`dedup_embedding_lsh`/`semantic_dedup` rows here time
-  // the deterministic oracle variants, kept in the sweep as the recorded
-  // cost of the quadratic fixed-parameter shape. The sweep reads the one
-  // query map every other gate reads.
-  private def allQueries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-    SparkEntry.queries
-
   def main(args: Array[String]): Unit = {
     val baseDir = args(0)
     val scaledDir = args(1)
     val factor = args.lift(2).map(_.toDouble).getOrElse(10.0)
     val outFile = args.lift(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt)
-    val subset = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-      .map(_.split(",").toSeq).getOrElse(DefaultSubset)
-      .filter(allQueries.contains)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt)
+    val subset = Sweep.only(SparkEntry.scaleQueries)
+    val spark = GraftSession.local()
 
-    def fmt(dec: Int)(d: Double): String =
-      String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(d))
-
-    // same discipline as Bench: warm table scans + ICU init + index stores
-    // per corpus so timed runs measure steady-state probe/compute cost
-    def warm(dir: String): Double = {
-      Tables.names.foreach { n =>
-        try Tables.load(spark, dir, n).count() catch { case _: Throwable => () }
-      }
-      locally {
-        import org.apache.spark.sql.functions.{upper, col, concat, lit}
-        spark.range(1)
-          .select(upper(concat(lit("首尔 İI"), col("id").cast("string"))))
-          .collect()
-      }
-      val t0 = System.nanoTime()
-      subset.filter(SparkEntry.indexBackedQueries.contains).foreach { n =>
-        try allQueries(n)(spark, dir).count() catch { case _: Throwable => () }
-      }
-      (System.nanoTime() - t0) / 1e9
+    def sweep(dir: String): (Double, Seq[Sweep.Timed]) = {
+      val build = Sweep.warm(spark, dir, subset).map(_._2).sum
+      (build, Sweep.run(spark, dir, subset, runs, s"scale bench [$dir]"))
     }
-
-    def sweep(dir: String): Seq[(String, Option[Double])] = subset.map { name =>
-      val times = (1 to runs).map { i =>
-        System.gc()
-        spark.catalog.clearCache()
-        System.err.println(s"[graft] scale bench [$dir] $name run $i/$runs")
-        val t0 = System.nanoTime()
-        val ok =
-          try { allQueries(name)(spark, dir).count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[graft] scale bench FAILED: $name: ${e.getMessage}")
-            false
-          }
-        ((System.nanoTime() - t0) / 1e9, ok)
-      }
-      (name, times.collect { case (t, true) => t }.minOption)
-    }
-
-    val baseBuild = warm(baseDir)
-    val base = sweep(baseDir).toMap
-    val scaledBuild = warm(scaledDir)
-    val scaled = sweep(scaledDir)
-
-    val perQuery = scaled.map { case (n, ts) =>
-      val ratio = for { t <- ts; b <- base.getOrElse(n, None) if b > 0 } yield t / b
-      s""""$n":{"base_sec":${base.getOrElse(n, None).map(fmt(2)).getOrElse("null")},""" +
-        s""""scaled_sec":${ts.map(fmt(2)).getOrElse("null")},""" +
-        s""""ratio":${ratio.map(fmt(1)).getOrElse("null")}}"""
-    }.mkString("{", ",", "}")
-    val failed = (scaled.collect { case (n, None) => n } ++
-      base.collect { case (n, None) => n }).distinct.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val over = scaled.flatMap { case (n, ts) =>
-      for { t <- ts; b <- base.getOrElse(n, None) if b > 0 && t / b > factor }
-        yield "\"" + n + "\":" + fmt(1)(t / b)
-    }.mkString("{", ",", "}")
+    val (baseBuild, base) = sweep(baseDir)
+    val (scaledBuild, scaled) = sweep(scaledDir)
+    val report = Sweep.pairwise("base_sec", base, "scaled_sec", scaled, ratioDecimals = 1)
+    val over = Sweep.jsonObject(
+      report.ratios.filter(_._2 > factor).map { case (n, r) => n -> fmt(1)(r) })
     val json =
       s"""{"metric":"scale_ratio","factor":${fmt(1)(factor)},"stat":"min_of_$runs",""" +
         s""""base":"${new java.io.File(baseDir).getName}",""" +
         s""""scaled":"${new java.io.File(scaledDir).getName}",""" +
         s""""build_sec":{"base":${fmt(1)(baseBuild)},"scaled":${fmt(1)(scaledBuild)}},""" +
-        s""""failed":$failed,"over_factor":$over,"queries":$perQuery}"""
+        s""""failed":${report.failed},"over_factor":$over,"queries":${report.queries}}"""
     println(json)
-    outFile.foreach { f =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(f), json.getBytes("UTF-8"))
-    }
+    outFile.foreach(Sweep.write(_, json))
     spark.stop()
   }
 }

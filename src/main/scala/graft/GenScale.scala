@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale-up fixture generator: derives an sfN' corpus from an existing sfN
@@ -168,15 +168,7 @@ object GenScale {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/root/repo/testdata-sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val dims = Set("region", "nation")
     val docStride = spark.read.parquet(s"$src/documents.parquet").count()
     Tables.names.foreach { t =>

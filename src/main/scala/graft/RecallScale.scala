@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.ApproxAnn
 import graft.functions.VectorFunctions
@@ -37,7 +37,7 @@ import graft.functions.VectorFunctions.Euclidean
   * this artifact extends that bar across scale decades for the JOIN form.
   *
   * Usage: RecallScale <outFile> <dir> [dir2 ...]
-  * Env: SPARK_GRAFT_CPUS (default 24), SPARK_GRAFT_RECALL_QUERIES
+  * Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_RECALL_QUERIES
   *      (default 200), SPARK_GRAFT_RECALL_K (default 10).
   */
 object RecallScale {
@@ -45,17 +45,9 @@ object RecallScale {
     val outFile = args(0)
     val dirs = args.drop(1).toSeq
     require(dirs.nonEmpty, "usage: RecallScale <outFile> <dir> [dir2 ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "24")
     val nQueries = sys.env.getOrElse("SPARK_GRAFT_RECALL_QUERIES", "200").toInt
     val k = sys.env.getOrElse("SPARK_GRAFT_RECALL_K", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     def fmt(d: Double): String =

@@ -81,6 +81,38 @@ object SparkEntry {
       "image_features", "image_resize", "audio_features", "video_frames",
       "bpe_encode", "csv_roundtrip", "tokenizer_fertility")
 
+  /** Bench's sf1 section and BenchCluster's default: one query per
+    * operator family, biased toward the shuffle/join-heavy. */
+  val benchSf1Queries: Seq[String] = Seq(
+    "q1_agg", "q5_region_revenue", "ann_cosine", "ann_lsh", "ann_ivfpq",
+    "ann_rescored", "bm25_multi", "dedup_exact", "dedup_minhash",
+    "dedup_embedding_lsh", "semantic_dedup", "semantic_dedup_capped",
+    "dedup_clusters",
+    "fuzzy_join", "fuzzy_join_exact", "decontamination_bloom",
+    "span_dedup", "gopher_report", "lm_score", "bpe_merges", "token_ids",
+    "stratified_sample", "pack_sequences", "pagerank", "hits_scores",
+    "heavy_hitters", "quantile_histogram", "asof_join", "rolling_stats",
+    "event_sessions_window", "hybrid_rrf", "knn_join_lsh", "image_features")
+
+  /** BenchScale's default decade sweep: the shuffle-heaviest families
+    * (VERDICT r8 item 1) — iterative graph, candidate-explosion joins,
+    * signature stores, global merges. */
+  val scaleQueries: Seq[String] = Seq(
+    "fuzzy_join", "fuzzy_join_exact", "knn_join_lsh", "knn_join_lsh_auto",
+    "knn_join_ivf", "knn_join_ivf_auto",
+    "hits_scores", "pagerank", "dedup_clusters", "dedup_minhash",
+    "semantic_dedup", "semantic_dedup_auto", "dedup_embedding_lsh",
+    "dedup_embedding_lsh_auto", "bpe_merges", "decontamination_bloom",
+    "decontamination_fixed_bench",
+    "knn_join_ivf_sqrt", "semantic_dedup_sqrt", "semantic_dedup_capped",
+    "dedup_clusters_best")
+
+  /** The k-means `_auto` queries: float training has no SQL replay, so
+    * they carry no oracle SQL and are gated by [[VerifyAgreement]]'s
+    * exact-agreement floors instead. */
+  val agreementGatedQueries: Set[String] =
+    Set("knn_join_ivf_auto", "semantic_dedup_auto")
+
   /** Queries EXCLUDED from the sf1 (10×) oracle gate (`Verify <dir> <out>
     * @sf1`): their ORACLES are deliberately brute-force second
     * implementations that DuckDB cannot run at 6M lineitems / 50k docs /

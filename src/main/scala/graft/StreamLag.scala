@@ -144,16 +144,7 @@ object StreamLag {
     val sfDir = args.lift(0).getOrElse("/root/repo/testdata-sf1")
     val nBatches = args.lift(1).map(_.toInt).getOrElse(20)
     val outFile = args.lift(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -19,19 +18,7 @@ object Verify {
       case "@sf100" => SparkEntry.sf100SpotQueries
       case csv => csv.split(",").toSet
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS); read as long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // direct task commits: halves the per-directory rename cost of
-      // partitionBy index materialization (local FS, no job-abort risk)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -103,7 +90,7 @@ object Verify {
       // WITHOUT throwing and writes nothing; scale runs keep their
       // documented skip.)
       System.err.println(s"[verify] agreement gate failed: ${e.getMessage}")
-      val targets = dumpedSet & Set("knn_join_ivf_auto", "semantic_dedup_auto")
+      val targets = dumpedSet & SparkEntry.agreementGatedQueries
       if (targets.nonEmpty) {
         val err = VerifyAgreement.toJson(targets.map(_ -> Map(
           "gate_error" -> VerifyAgreement.Score(-1.0, 0.0))).toMap)

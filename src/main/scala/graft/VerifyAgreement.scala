@@ -104,7 +104,7 @@ object VerifyAgreement {
     * table, corpus over [[MaxExactN]], or neither `_auto` query dumped). */
   def compute(spark: SparkSession, sfDir: String, outDir: String,
       dumped: Set[String]): Map[String, Map[String, Score]] = {
-    val targets = dumped & Set("knn_join_ivf_auto", "semantic_dedup_auto")
+    val targets = dumped & SparkEntry.agreementGatedQueries
     if (targets.isEmpty) return Map.empty
     val emb = Tables.load(spark, sfDir, "embeddings")
     val n = emb.filter(col("embedding").isNotNull).count()

@@ -10,17 +10,6 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  val cpus = 4
+  lazy val session: SparkSession = GraftSession.local(cpus)
 }
